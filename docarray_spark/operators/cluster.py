@@ -25,13 +25,15 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from docarray_spark.functions.distance import sqeuclidean_distance_col
+from docarray_spark.functions.vectors import arrow_matrix
 
 
-# Above this k·d the broadcast-matrix pandas_udf argmin takes over; the
+# Above this k·d the BLAS form of ``centroid_sqdist`` takes over; the
 # plan stays a zero-shuffle map either way. Two reasons to switch early:
 # (1) the literal fold is a higher-order AGGREGATE — CodegenFallback, so
 # every centroid distance is INTERPRETED per row (measured: IVF assignment
@@ -75,70 +77,83 @@ def _assign_cells_literal(
     return base.select(best["cell"].alias("cell"), "id", "v", *keep_cols)
 
 
+def centroid_sqdist(X: np.ndarray, C: np.ndarray, exact: bool) -> np.ndarray:
+    """``(n, k)`` squared distances of the rows of ``X`` to the centroids
+    ``C`` — the one place the cell math lives; every assignment path
+    (the ``assign_cells`` UDFs, multi-probe, Lloyd's partials and the
+    fused IVF scorer) takes its argmin from here.
+
+    ``exact``: Σ(x_j−c_j)² accumulated in DIMENSION ORDER — the identical
+    float64 operation sequence as :func:`_assign_cells_literal`'s fold
+    (and an ANSI-SQL replay), so the values are bit-for-bit the fold's.
+    Otherwise the BLAS form ``‖c‖² − 2x·c``: one matmul, with the row
+    constant ‖x‖² dropped since it cancels in the argmin; last-ulp drift
+    against the fold can flip near-exact ties, which is why oracle-gated
+    callers stay under ``LITERAL_ARGMIN_MAX_KD``."""
+    if exact:
+        d2 = np.zeros((len(X), len(C)), dtype=np.float64)
+        for j in range(C.shape[1]):
+            diff = X[:, j, None] - C[None, :, j]
+            d2 += diff * diff
+        return d2
+    return (C * C).sum(axis=1)[None, :] - 2.0 * (X @ C.T)
+
+
+def nearest_cell(X: np.ndarray, C: np.ndarray, exact: bool) -> np.ndarray:
+    """Position in ``C`` of each row's nearest centroid, with the literal
+    fold's semantics: centroids compared in the given order with strict
+    ``<``, so the first minimum wins (the smallest cell id when ``C`` is
+    cell-sorted); NaN never wins, and a row with no finite distance keeps
+    the fold's initial ``(-1, inf)`` accumulator → ``-1``."""
+    if not len(C):
+        return np.full(len(X), -1, dtype=np.int64)
+    d2 = centroid_sqdist(X, C, exact)
+    d2 = np.where(np.isnan(d2), np.inf, d2)
+    idx = np.argmin(d2, axis=1)
+    idx[~np.isfinite(d2[np.arange(len(X)), idx])] = -1
+    return idx
+
+
+def _assign_cells_arrow(
+    base: DataFrame,
+    centroids: list[tuple[int, list[float]]],
+    exact: bool,
+    keep_cols: tuple[str, ...] = (),
+):
+    """base(id, v) → (cell, id, v[, keep_cols]) through one Arrow scalar
+    UDF: the centroid matrix is broadcast once, each Arrow batch becomes
+    one matrix (:func:`arrow_matrix`) and :func:`nearest_cell` picks the
+    cell. A zero-shuffle map, like the literal fold. A NULL embedding, or
+    one whose length differs from the centroids', gets ``cell = -1`` (the
+    fold's zip_with NULL padding leaves its accumulator untouched)."""
+    cells = np.asarray([c for c, _ in centroids], dtype=np.int32)
+    C = np.asarray([v for _, v in centroids], dtype=np.float64)  # (k, d)
+    bc = base.sparkSession.sparkContext.broadcast((cells, C))
+
+    @F.arrow_udf("int")
+    def _cell(emb: pa.Array) -> pa.Array:
+        cells_, C_ = bc.value
+        X, valid = arrow_matrix(emb, C_.shape[1])
+        pos = nearest_cell(X, C_, exact)
+        out = np.full(len(valid), -1, dtype=np.int32)
+        out[valid] = np.where(pos >= 0, cells_[pos], -1)
+        return pa.array(out)
+
+    return base.select(_cell("v").alias("cell"), "id", "v", *keep_cols)
+
+
 def _assign_cells_exact(
     base: DataFrame,
     centroids: list[tuple[int, list[float]]],
     keep_cols: tuple[str, ...] = (),
 ):
-    """Oracle-range assignment (k·d ≤ ``LITERAL_ARGMIN_MAX_KD``) as an
-    Arrow-batched pandas_udf whose squared distances accumulate in
-    DIMENSION ORDER — the identical float64 operation sequence as
-    :func:`_assign_cells_literal`'s fold (and an ANSI-SQL replay), so the
-    values are bit-for-bit the fold's, without the fold's interpreted
+    """Oracle-range assignment (k·d ≤ ``LITERAL_ARGMIN_MAX_KD``): the
+    dimension-order distances of :func:`centroid_sqdist`, so cells are
+    bit-for-bit :func:`_assign_cells_literal`'s (centroids in the given
+    order, first minimum wins, NULL → -1) without the fold's interpreted
     CodegenFallback evaluation (r12 stage profile: the k=8·d=128 literal
-    fold burned ~33 CPU-seconds on 2 000 rows; this path is milliseconds).
-    The multi-probe exact branch (:func:`assign_cells_multi`) established
-    and pinned the same equivalence in r10.
-
-    Fold-semantics edge cases mirrored exactly: centroids evaluated in the
-    given order with strict ``<`` (first minimum wins → smallest cell id on
-    ties when centroids arrive cell-sorted); a NULL embedding or an
-    all-NaN distance row keeps the fold's initial ``(-1, inf)`` accumulator
-    → ``cell = -1``."""
-    order_cells = [c for c, _ in centroids]
-    C = np.asarray([v for _, v in centroids], dtype=np.float64)  # (k, d)
-    cells_arr = np.asarray(order_cells, dtype=np.int64)
-    bc = base.sparkSession.sparkContext.broadcast((cells_arr, C))
-
-    @F.pandas_udf("int")
-    def _argmin_exact(emb: pd.Series) -> pd.Series:
-        cells_, C_ = bc.value
-        n = len(emb)
-        if n == 0:
-            return pd.Series([], dtype="int32")
-        # rows whose embedding is NULL, length-mismatched vs the centroid
-        # dim, or not float-convertible keep the fold's padding semantics
-        # (zip_with null padding → NULL distance → accumulator stays
-        # (-1, inf) → cell -1) instead of a ragged np.asarray raising and
-        # killing the task (ADVICE r12 #3)
-        d_ = C_.shape[1]
-
-        def _row(e):
-            if e is None or len(e) != d_:
-                return None
-            try:
-                return np.asarray(e, dtype=np.float64)
-            except (TypeError, ValueError):
-                return None
-
-        rows = [_row(e) for e in emb]
-        null_mask = np.asarray([r is None for r in rows])
-        X = np.asarray([np.zeros(d_) if r is None else r for r in rows])
-        # dimension-order accumulation == the literal fold's Σ(x_j−c_j)²
-        d2 = np.zeros((n, len(C_)), dtype=np.float64)
-        for j in range(C_.shape[1]):
-            diff = X[:, j, None] - C_[None, :, j]
-            d2 += diff * diff
-        # fold semantics: strict < vs a running min starting at +inf; NaN
-        # never wins (NaN < acc is false), all-NaN/NULL rows keep cell -1
-        d2 = np.where(np.isnan(d2), np.inf, d2)
-        idx = np.argmin(d2, axis=1)
-        out = cells_[idx].astype("int64")
-        out[~np.isfinite(d2[np.arange(n), idx])] = -1
-        out[null_mask] = -1
-        return pd.Series(out.astype("int32"))
-
-    return base.select(_argmin_exact("v").alias("cell"), "id", "v", *keep_cols)
+    fold burned ~33 CPU-seconds on 2 000 rows; this path is milliseconds)."""
+    return _assign_cells_arrow(base, centroids, True, keep_cols)
 
 
 def _assign_cells_broadcast(
@@ -146,33 +161,12 @@ def _assign_cells_broadcast(
     centroids: list[tuple[int, list[float]]],
     keep_cols: tuple[str, ...] = (),
 ):
-    """Large-k·d assignment: the centroid matrix is BROADCAST once per
-    executor and the argmin runs as an Arrow-batched pandas_udf (one BLAS
-    ``X @ Cᵀ`` per batch) — same zero-shuffle map shape as the literal
-    fold, without the codegen blow-up. ``np.argmin`` keeps the FIRST
-    minimum, i.e. the smallest cell id on exact ties — the same tie-break
-    as the literal fold's strict ``<`` (centroids arrive cell-sorted).
-
-    Note: BLAS computes ``‖c‖² − 2x·c`` (the ‖x‖² row-constant cancels in
-    the argmin); last-ulp float drift vs the literal fold can flip
-    near-exact ties, which is why oracle-gated entries stay under
-    ``LITERAL_ARGMIN_MAX_KD`` on the literal path."""
-    cents = sorted(centroids)
-    cells = np.asarray([c for c, _ in cents], dtype=np.int64)
-    C = np.asarray([v for _, v in cents], dtype=np.float64)  # (k, d)
-    Cn = (C * C).sum(axis=1)
-    bc = base.sparkSession.sparkContext.broadcast((cells, C, Cn))
-
-    @F.pandas_udf("int")
-    def _argmin(emb: pd.Series) -> pd.Series:
-        cells_, C_, Cn_ = bc.value
-        if len(emb) == 0:
-            return pd.Series([], dtype="int32")
-        X = np.asarray([np.asarray(e, dtype=np.float64) for e in emb])
-        d2 = Cn_[None, :] - 2.0 * (X @ C_.T)
-        return pd.Series(cells_[np.argmin(d2, axis=1)].astype("int32"))
-
-    return base.select(_argmin("v").alias("cell"), "id", "v", *keep_cols)
+    """Large-k·d assignment: one BLAS ``X @ Cᵀ`` per Arrow batch
+    (:func:`centroid_sqdist`'s ``‖c‖²−2x·c`` form) — the same zero-shuffle
+    map shape as the literal fold, without the codegen blow-up. Centroids
+    are cell-sorted, so the first minimum is the smallest cell id on exact
+    ties, as with the fold's strict ``<``."""
+    return _assign_cells_arrow(base, sorted(centroids), False, keep_cols)
 
 
 def assign_cells(
@@ -183,8 +177,9 @@ def assign_cells(
 ):
     """Nearest-centroid assignment ``base(id, v) → (cell, id, v[,
     keep_cols])``, dispatching on k·d: exact dimension-order numpy argmin
-    (bit-identical to the SQL-replayable literal fold) below
-    ``literal_budget``, broadcast-matrix BLAS argmin above it. Both are
+    (bit-identical to the SQL-replayable literal fold) up to
+    ``literal_budget``, broadcast-matrix BLAS argmin above it — both
+    :func:`nearest_cell` in one Arrow UDF. Both are
     ZERO-SHUFFLE maps over the corpus (pinned in
     tests/test_pack_cluster.py). ``keep_cols`` rides extra ``base``
     columns through unchanged (``ivfpq_refresh`` keeps the store's
@@ -232,11 +227,10 @@ def assign_cells_multi(
     cents = sorted(centroids)
     cells = np.asarray([c for c, _ in cents], dtype=np.int64)
     C = np.asarray([v for _, v in cents], dtype=np.float64)  # (k, d)
-    Cn = (C * C).sum(axis=1)
     cn = np.linalg.norm(C, axis=1)
     Ccos = C / np.where(cn == 0.0, 1.0, cn)[:, None]
     exact = C.size <= LITERAL_ARGMIN_MAX_KD
-    bc = base.sparkSession.sparkContext.broadcast((cells, C, Cn, Ccos))
+    bc = base.sparkSession.sparkContext.broadcast((cells, C, Ccos))
     in_schema = base.select("id", "v").schema
     out_schema = T.StructType([
         T.StructField("cell", T.IntegerType()),
@@ -247,20 +241,12 @@ def assign_cells_multi(
     ])
 
     def _gen(batches):
-        cells_, C_, Cn_, Ccos_ = bc.value
+        cells_, C_, Ccos_ = bc.value
         for pdf in batches:
             if not len(pdf):
                 continue
             X = np.asarray([np.asarray(e, dtype=np.float64) for e in pdf["v"]])
-            if exact:
-                # dimension-order accumulation == the literal fold's /
-                # an oracle's Σ(x_j−c_j)² order; n×k temporaries per dim
-                d2 = np.zeros((len(X), len(C_)), dtype=np.float64)
-                for j in range(C_.shape[1]):
-                    diff = X[:, j, None] - C_[None, :, j]
-                    d2 += diff * diff
-            else:
-                d2 = Cn_[None, :] - 2.0 * (X @ C_.T)
+            d2 = centroid_sqdist(X, C_, exact)
             # stable argsort: exact ties keep centroid (= cell-id) order,
             # matching assign_cells' first-minimum tie-break at _probe=0
             idx = np.argsort(d2, axis=1, kind="stable")[:, :p]
@@ -308,19 +294,18 @@ def _lloyd_partials(base: DataFrame, centroids: list[tuple[int, list[float]]]):
     cents = sorted(centroids)
     cells = np.asarray([c for c, _ in cents], dtype=np.int64)
     C = np.asarray([v for _, v in cents], dtype=np.float64)  # (k, d)
-    Cn = (C * C).sum(axis=1)
     k, d = C.shape
-    bc = base.sparkSession.sparkContext.broadcast((cells, C, Cn))
+    bc = base.sparkSession.sparkContext.broadcast((cells, C))
 
     def _part(batches):
-        cells_, C_, Cn_ = bc.value
+        cells_, C_ = bc.value
         sums = np.zeros((k, d), dtype=np.float64)
         cnt = np.zeros(k, dtype=np.int64)
         for pdf in batches:
             if not len(pdf):
                 continue
             X = np.asarray([np.asarray(e, dtype=np.float64) for e in pdf["v"]])
-            a = np.argmin(Cn_[None, :] - 2.0 * (X @ C_.T), axis=1)
+            a = np.argmin(centroid_sqdist(X, C_, False), axis=1)
             np.add.at(sums, a, X)
             cnt += np.bincount(a, minlength=k)
         hit = np.nonzero(cnt)[0]

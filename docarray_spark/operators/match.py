@@ -7,11 +7,19 @@ whose batched mode is a running per-query top-k merge
 (``math/helper.py:69-91``). This operator is the same two-phase pattern,
 distributed:
 
-1. **map phase** (``mapInPandas``, Arrow batches): the bounded query matrix
-   is broadcast to every corpus partition; each partition streams its rows
-   through the numpy distance kernel keeping only a running top-k per query
-   (plus the partition-wide min/max per query when normalization is on).
-   Shuffle output is O(partitions × queries × k), never O(N × Q).
+1. **map phase** (``mapInArrow``): the bounded query matrix is broadcast
+   to every corpus partition; each Arrow batch's embedding column becomes
+   one float64 matrix straight from its flat values buffer
+   (``functions.vectors.arrow_matrix`` — no per-row conversion; NULL and
+   wrong-length rows are skipped), goes through the numpy distance kernel,
+   and only the k smallest ``(score, match_id)`` pairs per query survive
+   the partition (plus the partition-wide min/max per query when
+   normalization is on). Keeping ties by id, not at random, is what makes
+   the result independent of partitioning. Shuffle output is
+   O(partitions × queries × k), never O(N × Q). Moving a cached
+   ``array<float>`` column into Arrow costs about 4 CPU-s per full
+   1M×128 scan on a 4-core host (measured with a no-op ``mapInArrow``);
+   that transfer, not the scoring, is the floor of this pass.
 2. **reduce phase**: one hash shuffle on ``query_id``; ``row_number`` over
    ``(score, match_id)`` gives the global rank with a deterministic
    tie-break; normalization bounds fold with ``min/max`` windows over the
@@ -30,12 +38,15 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from docarray_spark.functions.distance import resolve_metric
+from docarray_spark.functions.vectors import arrow_matrix, query_matrix, smallest_k, topk_pairs
 from docarray_spark.queryset.compiler import compile_filter
 
 _MINMAX_EPS = 1e-7  # reference math/helper.py:6-37
@@ -91,7 +102,8 @@ def match(
             "raise max_query_rows explicitly if the driver can hold it"
         )
     qids = [r[0] for r in qrows]
-    qmat = np.asarray([r[1] for r in qrows], dtype=np.float64)
+    qmat = query_matrix([r[1] for r in qrows])
+    dim = qmat.shape[1]
 
     spark = corpus.sparkSession
     bc = spark.sparkContext.broadcast((qids, qmat))
@@ -110,21 +122,20 @@ def match(
             T.StructField("pmax", T.DoubleType()),
         ]
     )
+    arrow_schema = to_arrow_schema(out_schema)
 
-    def _partition_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _partition_topk(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         q_ids, q_mat = bc.value
         nq = len(q_ids)
-        cand_scores: list[np.ndarray] = []  # each (nq, <=k)
-        cand_ids: list[np.ndarray] = []
+        acc_q, acc_s, acc_i = [], [], []  # candidate query row, score, corpus id
         pmin = np.full(nq, np.inf)
         pmax = np.full(nq, -np.inf)
-        for pdf in batches:
-            emb = pdf[on]
-            mask = emb.notna().to_numpy()
-            if not mask.any():
+        for batch in batches:
+            mat, valid = arrow_matrix(batch.column(1), dim)
+            if not len(mat):
                 continue
-            ids = pdf[corpus_id_col].to_numpy()[mask]
-            mat = np.asarray([np.asarray(e, dtype=np.float64) for e in emb[mask]])
+            ids = batch.column(0).filter(pa.array(valid))
+            ids_np = ids.to_numpy(zero_copy_only=False)
             d = kernel(q_mat, mat, eps=eps)  # (nq, b)
             # normalization bounds come from the RAW distance row, self
             # included — the reference normalizes before the mixin drops
@@ -135,39 +146,32 @@ def match(
                 pmin = np.fmin(pmin, np.nanmin(d, axis=1, initial=np.inf))
                 pmax = np.fmax(pmax, np.nanmax(d, axis=1, initial=-np.inf))
             if exclude_self:
-                same = np.asarray(q_ids)[:, None] == ids[None, :]
+                same = np.asarray(q_ids)[:, None] == ids_np[None, :]
                 d = np.where(same, np.inf, d)
-            kk = d.shape[1] if k is None else min(k, d.shape[1])
-            idx = (
-                np.argpartition(d, kth=kk - 1, axis=1)[:, :kk]
-                if kk < d.shape[1]
-                else np.tile(np.arange(d.shape[1]), (nq, 1))
-            )
-            cand_scores.append(np.take_along_axis(d, idx, axis=1))
-            cand_ids.append(ids[idx])
-        if not cand_scores:
+            r, c = topk_pairs(d, ids_np, k)
+            acc_q.append(r)
+            acc_s.append(d[r, c])
+            acc_i.append(ids.take(pa.array(c)))
+        if not acc_q:
             return
-        scores = np.hstack(cand_scores)  # (nq, C)
-        mids = np.hstack(cand_ids)
-        kk = scores.shape[1] if k is None else min(k, scores.shape[1])
-        if kk < scores.shape[1]:
-            idx = np.argpartition(scores, kth=kk - 1, axis=1)[:, :kk]
-            scores = np.take_along_axis(scores, idx, axis=1)
-            mids = np.take_along_axis(mids, idx, axis=1)
-        keep = ~np.isinf(scores).ravel()
-        n = scores.shape[1]
-        out = pd.DataFrame(
-            {
-                "query_id": np.repeat(q_ids, n)[keep],
-                "match_id": mids.ravel()[keep],
-                "score": scores.ravel()[keep],
-                "pmin": np.repeat(pmin, n)[keep],
-                "pmax": np.repeat(pmax, n)[keep],
-            }
+        qi = np.concatenate(acc_q)
+        scores = np.concatenate(acc_s)
+        mids = pa.concat_arrays(acc_i)
+        sel = smallest_k(qi, scores, mids.to_numpy(zero_copy_only=False), k)
+        sel = sel[~np.isinf(scores[sel])]  # excluded self rows
+        qi = qi[sel]
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(q_ids, type=arrow_schema.field("query_id").type).take(pa.array(qi)),
+                mids.take(pa.array(sel)),
+                pa.array(scores[sel]),
+                pa.array(pmin[qi]),
+                pa.array(pmax[qi]),
+            ],
+            schema=arrow_schema,
         )
-        yield out
 
-    cand = corpus.select(corpus_id_col, on).mapInPandas(_partition_topk, out_schema)
+    cand = corpus.select(corpus_id_col, on).mapInArrow(_partition_topk, out_schema)
 
     by_query = Window.partitionBy("query_id")
     rank_w = by_query.orderBy(F.col("score").asc(), F.col("match_id").asc())
@@ -246,12 +250,14 @@ def knn_graph(
 
     Shuffle-based block-nested loop: rows are hashed into ``n_blocks``
     blocks; each row is exploded to every (query_block, corpus_block) task
-    key it participates in (2·B-1 keys), one ``applyInPandas`` task per
-    block pair computes the partial top-k of its query block against its
+    key it participates in (2·B-1 keys), one ``applyInArrow`` task per
+    block pair computes the partial top-k (the k smallest ``(score,
+    match_id)`` pairs, ties kept by id) of its query block against its
     corpus block with the numpy kernel, and one window merge per query
-    yields the global top-k. The plan is: ONE corpus scan → explode →
-    ONE hash shuffle on the block pair → partial top-k → ONE shuffle on
-    query_id. Compute is inherently O(N²/B) per task — that is what
+    yields the global top-k. A vector is compared only with vectors of
+    its own length; NULL embeddings are skipped. The plan is: ONE corpus
+    scan → explode → ONE hash shuffle on the block pair → partial top-k →
+    ONE shuffle on query_id. Compute is inherently O(N²/B) per task — that is what
     'exact graph' means; at open-web scale use ``ann.ivf_match`` /
     ``lsh_match`` for the approximate graph and keep this as the
     ground-truth path on samples. Shuffle volume is (2·B-1)×corpus (the
@@ -294,37 +300,47 @@ def knn_graph(
         ]
     )
 
-    def _block_pair_topk(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        qb, cb = key
-        qs = pdf[pdf["_blk"] == qb]
-        cs = pdf[pdf["_blk"] == cb]
-        if qs.empty or cs.empty:
-            return pd.DataFrame({"query_id": [], "match_id": [], "score": []})
-        q_ids = qs["_id"].to_numpy()
-        c_ids = cs["_id"].to_numpy()
-        q_mat = np.asarray([np.asarray(v, dtype=np.float64) for v in qs["_v"]])
-        c_mat = np.asarray([np.asarray(v, dtype=np.float64) for v in cs["_v"]])
-        d = kernel(q_mat, c_mat, eps=eps)
-        if exclude_self:
-            d = np.where(q_ids[:, None] == c_ids[None, :], np.inf, d)
-        kk = min(k, d.shape[1])
-        idx = (
-            np.argpartition(d, kth=kk - 1, axis=1)[:, :kk]
-            if kk < d.shape[1]
-            else np.tile(np.arange(d.shape[1]), (len(q_ids), 1))
-        )
-        scores = np.take_along_axis(d, idx, axis=1)
-        keep = ~np.isinf(scores).ravel()
-        n = scores.shape[1]
-        return pd.DataFrame(
-            {
-                "query_id": np.repeat(q_ids, n)[keep],
-                "match_id": c_ids[idx].ravel()[keep],
-                "score": scores.ravel()[keep],
-            }
+    arrow_schema = to_arrow_schema(out_schema)
+
+    def _block_pair_topk(key, tbl):
+        qb, cb = (x.as_py() for x in key)
+        vecs = tbl.column("_v")
+        ids = tbl.column("_id").combine_chunks()
+        ids_np = ids.to_numpy(zero_copy_only=False)
+        blk = tbl.column("_blk").to_numpy()
+        out_q, out_m, out_s = [], [], []
+        # a vector is compared only with vectors of its own length, so a
+        # ragged row never fails the task and never depends on its block
+        lengths = np.unique(pc.list_value_length(vecs).drop_null().to_numpy())
+        for dim in lengths[lengths > 0]:
+            mat, valid = arrow_matrix(vecs, int(dim))
+            pos = np.nonzero(valid)[0]  # table row of each matrix row
+            qs = np.nonzero(blk[pos] == qb)[0]
+            cs = np.nonzero(blk[pos] == cb)[0]
+            if not len(qs) or not len(cs):
+                continue
+            c_ids = ids_np[pos[cs]]
+            d = kernel(mat[qs], mat[cs], eps=eps)
+            if exclude_self:
+                d = np.where(ids_np[pos[qs]][:, None] == c_ids[None, :], np.inf, d)
+            r, c = topk_pairs(d, c_ids, k)
+            keep = ~np.isinf(d[r, c])
+            r, c = r[keep], c[keep]
+            out_q.append(pos[qs[r]])
+            out_m.append(pos[cs[c]])
+            out_s.append(d[r, c])
+        if not out_q:
+            return arrow_schema.empty_table()
+        return pa.Table.from_arrays(
+            [
+                ids.take(pa.array(np.concatenate(out_q))),
+                ids.take(pa.array(np.concatenate(out_m))),
+                pa.array(np.concatenate(out_s)),
+            ],
+            schema=arrow_schema,
         )
 
-    cand = tasks.groupBy("_qb", "_cb").applyInPandas(_block_pair_topk, out_schema)
+    cand = tasks.groupBy("_qb", "_cb").applyInArrow(_block_pair_topk, out_schema)
     w = Window.partitionBy("query_id").orderBy(F.col("score").asc(), F.col("match_id").asc())
     out = cand.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
     score = F.round("score", round_scores) if round_scores is not None else F.col("score")

@@ -1092,10 +1092,17 @@ def test_read_files_options(spark, tmp_path):
     # size caps; list-of-patterns accepted
     assert read_files(spark, [str(d / "*.txt")], size=3).count() == 3
 
-    # sampling is deterministic (same subset twice) and roughly thins
+    # sampling is deterministic (same subset twice) and keeps exactly the
+    # files whose md5-of-path unit hash falls below the rate
+    import hashlib
+
     s1 = {r.uri for r in read_files(spark, str(d / "*"), sampling_rate=0.5).collect()}
     s2 = {r.uri for r in read_files(spark, str(d / "*"), sampling_rate=0.5).collect()}
-    assert s1 == s2 and len(s1) < 7
+    expected = {
+        r.uri for r in df.collect()
+        if int(hashlib.md5(r.uri.encode()).hexdigest()[:8], 16) / 2**32 < 0.5
+    }
+    assert s1 == expected and s1 == s2
 
     # datauri mode embeds the content; mimetype guessed from the
     # extension (reference mimetypes.guess_type, data.py:57)
